@@ -1357,6 +1357,25 @@ def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_assignment(_t(spark, sf_dir, "documents"), n_shards=16)
 
 
+_SESSION_DIRS: dict[str, str] = {}
+
+
+def _session_dir(spark: SparkSession, name: str) -> str:
+    """One scratch directory per (Spark application, ``name``): every call
+    in a session reuses it, and it is removed when the interpreter exits."""
+    key = f"{spark.sparkContext.applicationId}/{name}"
+    path = _SESSION_DIRS.get(key)
+    if path is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        path = tempfile.mkdtemp(prefix=f"ocr_spark_{name}_")
+        atexit.register(shutil.rmtree, path, True)
+        _SESSION_DIRS[key] = path
+    return path
+
+
 def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest gate: docs >= 250 arrive as the new batch
     against committed docs < 250, plus planted exact copies (doc 0..4 at
@@ -1365,9 +1384,8 @@ def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout: the committed side's band rows come from a persisted
     bucketed band store (write_band_store), so the candidate band join
     carries no Exchange on the committed side — same rows, same pair
-    set, same exact DuckDB twin as the derive-in-session path."""
-    import tempfile
-
+    set, same exact DuckDB twin as the derive-in-session path. The store
+    is rewritten in place at one per-session path on every call."""
     from ocr_spark.operators.incremental import (
         committed_state,
         incremental_status_against_state,
@@ -1394,7 +1412,7 @@ def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_band_store(
         state,
         "dedup_increment_band_store",
-        tempfile.mkdtemp(prefix="band_store_") + "/t",
+        _session_dir(spark, "band_store") + "/t",
     )
     return incremental_status_against_state(
         new, state, band_store=spark.table("dedup_increment_band_store")

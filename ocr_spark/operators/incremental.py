@@ -110,6 +110,7 @@ def incremental_status_against_state(
     bloom_n_blocks: int | None = None,
     band_store: DataFrame | None = None,
     band_store_tail_state: DataFrame | None = None,
+    new_state: DataFrame | None = None,
 ) -> DataFrame:
     """(id_col, status) for every row of ``new_df`` checked against a
     persisted :func:`committed_state` table: 'exact_seen' (fingerprint
@@ -122,8 +123,29 @@ def incremental_status_against_state(
     union-wide bucket cap, same exact-jaccard verification — but computes
     the committed side entirely from stored state (plan contains no scan
     of committed text), and skips intra-side pairing up front instead of
-    filtering it out afterwards."""
-    new_state = committed_state(new_df, text_col, id_col, perms)
+    filtering it out afterwards.
+
+    Parameters beyond the obvious:
+
+    - ``new_state``: the batch's own ``committed_state(new_df, text_col,
+      id_col, perms)`` rows, when the caller already holds them (streaming
+      ingest persists them once, gates with them, and commits the admitted
+      subset of the same rows); ``new_df`` is then not read. Without it
+      the batch state is derived from ``new_df`` here; either way the
+      gate below is the same.
+    - ``band_store``: a :func:`write_band_store` table used as the
+      committed side of the band join. Precondition: it must hold exactly
+      ``band_buckets(state_df)``'s (id, band, bucket) rows — or, together
+      with ``band_store_tail_state``, exactly those rows split disjointly
+      into the stored base and the state rows appended since it was
+      written. A stale store silently loses near-dup recall; the gate
+      cannot detect it (streaming ingest checks its stamp before passing
+      one).
+    - ``band_store_tail_state``: state rows committed after ``band_store``
+      was written (same schema as ``state_df``); their band rows are
+      derived in-session."""
+    if new_state is None:
+        new_state = committed_state(new_df, text_col, id_col, perms)
     new_ids = new_state.select("id")
 
     exact_probe = new_state.select("id", "fp")
@@ -157,8 +179,8 @@ def incremental_status_against_state(
     # the disjoint union base ∪ tail; the candidate join runs per part and
     # unions RESULTS, so the base keeps its exchange-free scan while the
     # tail — O(batches since refresh), not O(corpus) — pays the ordinary
-    # shuffle. Either layout must hold exactly band_buckets(state_df)'s
-    # rows, so the pair set — and the DuckDB twin — are unchanged.
+    # shuffle. The pair set — and the DuckDB twin — are unchanged (see
+    # the ``band_store`` precondition above).
     sb_parts: list[DataFrame]
     if band_store is not None:
         sb_parts = [band_store.select("id", "band", "bucket")]

@@ -48,9 +48,18 @@ def zorder_key(
     domains (e.g. hash-valued columns) and scrambles the key, while a
     double keeps the 16 bucket bits exact (53-bit mantissa) for any
     domain width. The result is clamped to [0, 2^bits-1] so float
-    rounding at the domain edge cannot escape the key range."""
+    rounding at the domain edge cannot escape the key range. The key is
+    a signed 64-bit long, so ``bits * len(cols)`` must be at most 63
+    (ValueError otherwise): a wider key would set the sign bit or wrap
+    the shift distance and scramble the sort order."""
     if not cols:
         raise ValueError("zorder_key needs at least one column")
+    if bits * len(cols) > 63:
+        raise ValueError(
+            f"zorder_key: {len(cols)} columns x {bits} bits = "
+            f"{bits * len(cols)} key bits exceeds the 63 a signed long "
+            "holds; pass fewer columns or a smaller bits"
+        )
     dtypes = dict(df.dtypes)
     for c in cols:
         if c not in dtypes:

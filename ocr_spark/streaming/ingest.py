@@ -192,6 +192,13 @@ class DedupIngest:
 
             uniq = exact_dedup(batch, self.text_col, self.id_col).persist()
             pinned.append(uniq)
+            # the batch's dedup state (fp, shingles, signature), derived
+            # ONCE: the gate probes with it and the state commit below is
+            # its admitted subset, so the batch text is tokenized once
+            batch_state = committed_state(
+                uniq, self.text_col, self.id_col
+            ).persist()
+            pinned.append(batch_state)
 
             # 2. gate against persisted state (+ bloom prefilter). If a
             # crash already committed this batch to the STATE table, the
@@ -212,6 +219,7 @@ class DedupIngest:
                     bloom=bloom_df, bloom_n_blocks=self.n_blocks,
                     band_store=band_base,
                     band_store_tail_state=band_tail,
+                    new_state=batch_state,
                 )
             elif state_has:
                 status = None  # replay past the state commit: see below
@@ -223,11 +231,11 @@ class DedupIngest:
             if status is not None:
                 status = status.persist()
                 pinned.append(status)
+                new_ids = status.where(F.col("status") == "new").select(
+                    self.id_col
+                )
                 admitted = uniq.join(
-                    status.where(F.col("status") == "new")
-                    .select(self.id_col),
-                    self.id_col,
-                    "left_semi",
+                    new_ids, self.id_col, "left_semi"
                 ).persist()
                 pinned.append(admitted)
 
@@ -236,8 +244,9 @@ class DedupIngest:
                 # the gate still unpolluted (state not yet written).
                 if not corpus_has:
                     self.corpus.append(admitted, properties=props)
-                delta_state = committed_state(
-                    admitted, self.text_col, self.id_col
+                delta_state = batch_state.join(
+                    new_ids.withColumnRenamed(self.id_col, "id"),
+                    "id", "left_semi",
                 )
                 self.state.append(delta_state, properties=props)
                 # periodic bucketed band-store refresh (store first, meta

@@ -116,3 +116,20 @@ def test_queries_are_session_default_proof(spark, duck):
             pd.testing.assert_frame_equal(got, want, check_dtype=True, atol=0, rtol=0)
     finally:
         spark.conf.set("spark.sql.session.timeZone", original)
+
+
+def test_dedup_increment_reuses_one_band_store_path(spark):
+    """q_dedup_increment writes its band store to one per-session path, so
+    repeated calls (bench reps, parity runs) leave no directory behind per
+    call."""
+
+    def location():
+        QUERIES["dedup_increment"](spark, SF_DIR)
+        rows = spark.sql(
+            "DESCRIBE TABLE EXTENDED dedup_increment_band_store"
+        ).collect()
+        return next(r.data_type for r in rows if r.col_name == "Location")
+
+    first = location()
+    assert location() == first
+    assert entrymod._session_dir(spark, "band_store") in first

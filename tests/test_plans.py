@@ -370,3 +370,44 @@ def test_incremental_band_store_committed_side_no_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         spark.sql("DROP TABLE IF EXISTS bkt_band_store")
+
+
+def _gram_lambdas(df) -> list[str]:
+    """The n-gram lambda bodies (``lambdafunction(...)`` calls that slice a
+    token array) of ``df``'s optimized plan, each with balanced parens."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        depth, i = 0, start + len("lambdafunction")
+        for i in range(i, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            if depth == 0:
+                break
+        body = plan[start:i + 1]
+        if "slice(" in body:
+            bodies.append(body)
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_ngram_lambdas_read_precomputed_tokens(spark):
+    """Shingles (minhash) and contamination grams slice a tokens COLUMN
+    materialized by a projection below the lambda. Referencing the
+    tokenizer expression inside the lambda instead would re-lowercase,
+    re-regex and re-split the whole text once per gram — O(n^2) per
+    document — and the optimizer must not inline it back."""
+    import re
+
+    from ocr_spark.operators.dedup import contamination_check, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(1, "Alpha beta  gamma delta epsilon zeta eta theta iota"), (2, "x y")],
+        "doc_id long, text string",
+    )
+    for df in (minhash_signatures(docs), contamination_check(docs, docs)):
+        bodies = _gram_lambdas(df)
+        assert bodies, df._jdf.queryExecution().optimizedPlan().toString()
+        for body in bodies:
+            assert "split(" not in body and "regexp_replace(" not in body, body
+            assert re.search(r"slice\(\w+#\d+, \(lambda ", body), body

@@ -47,6 +47,32 @@ def test_ingest_two_batches_dedups_across_and_within(spark, tmp_path):
     assert m[0].n_new == 2 and m[1].n_exact_seen == 1
 
 
+def test_ingest_state_equals_committed_state_of_corpus(spark, tmp_path):
+    """The state commit reuses the batch state the gate probed with,
+    restricted to admitted ids. After several batches with intra-batch,
+    exact and near duplicates, the state table must equal
+    committed_state(corpus) row for row — reusing the rows changed
+    nothing."""
+    from ocr_spark.operators.incremental import committed_state
+
+    ing = DedupIngest(str(tmp_path / "t"))
+    batches = [
+        _docs(spark, [_mk(0), _mk(1), (2, _mk(0)[1])]),
+        _docs(spark, [(10, _mk(0)[1]), _mk(11), (12, _mk(1)[1] + " drift")]),
+        _docs(spark, [_mk(20), (21, _mk(11)[1]), _mk(22)]),
+    ]
+    for bid, b in enumerate(batches):
+        ing.process_batch(b, bid)
+    cols = ["id", "fp", "sh", "sig"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    state = rows(ing.state.read(spark))
+    assert [r[0] for r in state] == [0, 1, 11, 20, 22]
+    assert state == rows(committed_state(ing.corpus.read(spark)))
+
+
 def test_ingest_batch_ledger_skips_committed_batch(spark, tmp_path):
     ing = DedupIngest(str(tmp_path / "t"))
     b = _docs(spark, [_mk(0), _mk(1)])

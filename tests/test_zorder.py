@@ -101,3 +101,22 @@ def test_zorder_wide_int64_domain_no_overflow(spark):
     assert z[0] <= z[1] <= z[2] <= z[3]
     assert z[0] < z[3]
     assert all(0 <= v < (1 << 32) for v in z.values())
+
+
+def test_zorder_key_wider_than_63_bits_fails_fast(spark):
+    """4 columns at the default 16 bits need a 64-bit key: bit 63 is the
+    sign bit of a long, so the key would go negative and mis-sort. The
+    width check raises before any job runs; 4 x 15 = 60 bits still fits
+    and keeps every key non-negative."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(0, 0, 0, 0, 0), (1, 9, 9, 9, 9), (2, 0, 9, 0, 9)],
+        "id long, a long, b long, c long, d long",
+    )
+    cols = ["a", "b", "c", "d"]
+    with pytest.raises(ValueError, match="63"):
+        zorder_key(df, cols)
+    z = {r["id"]: r["_z"] for r in zorder_key(df, cols, bits=15).collect()}
+    assert all(0 <= v < (1 << 60) for v in z.values())
+    assert z[1] == (1 << 60) - 1 and z[0] == 0
